@@ -74,6 +74,21 @@ object Cli {
     s
   }
 
+  /** A kg-* mode's table bucket count: a positive integer, or the
+    * usage error to report for `arg`.
+    */
+  private[graft] def parseBuckets(arg: String): Either[String, Int] =
+    arg.toIntOption.filter(_ > 0)
+      .toRight(s"buckets must be a positive integer, got '$arg'")
+
+  private def bucketsArg(arg: String): Int =
+    parseBuckets(arg).fold(usageError, identity)
+
+  private def usageError(msg: String): Nothing = {
+    System.err.println(s"usage: $msg")
+    sys.exit(2)
+  }
+
   def main(args: Array[String]): Unit = {
     // stable number formatting in compare/cv tables and JSON regardless
     // of platform locale (a comma decimal separator breaks consumers)
@@ -245,7 +260,7 @@ object Cli {
       // line on stdout. Exit 3 when any defect metric (dangling /
       // orphan / duplicate / null-key) is nonzero: the publish gate,
       // scriptable.
-      val buckets = rest.headOption.map(_.toInt).getOrElse(16)
+      val buckets = rest.headOption.map(bucketsArg).getOrElse(16)
       val spark = localSession("graft-kg-audit")
       val t = graft.io.TableIO.readCommitted(spark, tableDir, buckets)
       val audit = graft.pipeline.KgPipeline.kgAudit(spark, t)
@@ -266,7 +281,7 @@ object Cli {
       // W3C N-Triples export of a committed triples table
       // (KgPipeline.ntriples): outDir gets .text part files a standard
       // RDF toolchain can load. One JSON line: distinct triples written.
-      val buckets = rest.headOption.map(_.toInt).getOrElse(16)
+      val buckets = rest.headOption.map(bucketsArg).getOrElse(16)
       val spark = localSession("graft-kg-export")
       val t = graft.io.TableIO.readCommitted(spark, tableDir, buckets)
       val lines = graft.pipeline.KgPipeline.ntriples(t)
@@ -287,7 +302,7 @@ object Cli {
       // Output: a header line of variable names, then TSV binding rows.
       //   graft kg-query out/triples "?m hasEntity ?e" "?e hasType persName"
       val buckets = rest.find(_.startsWith("buckets="))
-        .map(_.stripPrefix("buckets=").toInt).getOrElse(16)
+        .map(a => bucketsArg(a.stripPrefix("buckets="))).getOrElse(16)
       val patterns = rest.filterNot(_.startsWith("buckets=")).map { a =>
         a.trim.split("\\s+") match {
           case Array(s, p, o) => (s, p, o)

@@ -340,8 +340,9 @@ object PipelineQueries {
     // pass at sf0.1 — guide §2.4 "remove shuffles outright" /
     // §5 caching a reused, expensive intermediate). Edge-sized, two
     // longs — the same working-set class pageRank itself persists.
-    // Released right after pageRank returns (pageRank is eager; its
-    // result is checkpoint-backed and never re-reads the input).
+    // Released right after pageRank returns: pageRank is eager, and
+    // its result never re-reads the input (a local frame on the driver
+    // path, a checkpoint on the distributed one).
     val edges = pairs.select(xxhash64(col("ea")).as("src"),
       xxhash64(col("eb")).as("dst"))
       .distinct()

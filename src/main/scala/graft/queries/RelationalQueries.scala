@@ -1806,9 +1806,10 @@ object RelationalQueries {
     * ≤ 2^8 after 4 iterations and magnitude « 2^53 — all FP arithmetic
     * is EXACT, hence order-independent, hence bit-identical across
     * engines in any summation order. Runs through the REAL
-    * [[graft.pipeline.Graph.pageRank]] loop (dangling redistribution
-    * and all — the dangling term is exactly 0.0 here); GraphSpec pins
-    * the general (0.85, dangling-node) path against a driver recompute.
+    * [[graft.pipeline.Graph.pageRank]] (dangling redistribution and
+    * all — the dangling term is exactly 0.0 here), on whichever path
+    * its edge count selects; GraphSpec pins the general (0.85,
+    * dangling-node) case on both paths against a driver recompute.
     */
   def q82_pagerank_dyadic(s: SparkSession, dir: String): DataFrame =
     graft.pipeline.Graph.pageRank(

@@ -48,8 +48,7 @@ class EnamexSpec extends AnyFunSuite {
     assert(parseEnamex(renderEnamex(f)) == f)
   }
   test("real reference corpus lines parse and roundtrip") {
-    val src = scala.io.Source.fromFile("/root/reference/example/train.nes")("UTF-8")
-    val lines = try src.getLines().take(200).toVector finally src.close()
+    val lines = RefCorpus.lines(200)
     lines.foreach { l =>
       val f = parseEnamex(l)
       assert(f.nonEmpty)
@@ -137,8 +136,7 @@ class IobSpec extends AnyFunSuite {
     ls.foreach(l => assert(renderLabel(parseLabel(l)) == l))
   }
   test("roundtrip on reference corpus") {
-    val src = scala.io.Source.fromFile("/root/reference/example/train.nes")("UTF-8")
-    val lines = try src.getLines().take(300).toVector finally src.close()
+    val lines = RefCorpus.lines(300)
     lines.foreach { l =>
       val f = Forest.parseEnamex(l)
       assert(decodeForest(encodeForest(f)) == f, s"IOB roundtrip failed: $l")

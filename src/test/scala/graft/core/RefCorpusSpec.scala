@@ -3,10 +3,10 @@ package graft.core
 import graft.NerfModel
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Golden gate on the REAL reference corpus
-  * (/root/reference/example/train.nes, 1,000 NKJP-style Polish
-  * sentences): train deterministically, decode the first 100 sentences,
-  * and compare byte-for-byte against the committed golden decodings.
+/** Golden gate on the REAL reference corpus ([[RefCorpus]], 1,000
+  * NKJP-style Polish sentences): train deterministically, decode the
+  * first 100 sentences, and compare byte-for-byte against the committed
+  * golden decodings, which this test only reads.
   * This pins every `[dep]` semantic (SURVEY.md §5.3) — tokenizer, IOB
   * joined labels, feature sites, codec, Viterbi, SGD order — on real
   * data: any refactor that changes behavior trips this before it can
@@ -14,36 +14,28 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class RefCorpusSpec extends AnyFunSuite {
 
-  private lazy val model: NerfModel = {
-    val src = scala.io.Source.fromFile("/root/reference/example/train.nes")("UTF-8")
-    val lines = try src.getLines().toVector finally src.close()
-    NerfModel.trainOnForests(
-      lines.filter(_.nonEmpty).map(l => Forest.reTokenize(Forest.parseEnamex(l))))
-  }
+  private lazy val model: NerfModel = NerfModel.trainOnForests(
+    RefCorpus.lines().filter(_.nonEmpty).map(l => Forest.reTokenize(Forest.parseEnamex(l))))
 
   test("decodings of the reference corpus match the committed golden") {
-    val src = scala.io.Source.fromFile("/root/reference/example/train.nes")("UTF-8")
-    val lines = try src.getLines().take(100).toVector finally src.close()
+    val lines = RefCorpus.lines(100)
     val raw = lines.map(l => Forest.parseEnamex(l).flatMap(_.leaves).mkString(" "))
     val decoded = raw.map(s => Forest.renderEnamex(model.ner(s)))
 
     val goldenPath = java.nio.file.Paths.get(
       "src/test/resources/golden/ref_decodings_100.nes")
-    if (!java.nio.file.Files.exists(goldenPath)) {
-      java.nio.file.Files.createDirectories(goldenPath.getParent)
-      java.nio.file.Files.write(goldenPath,
-        decoded.mkString("\n").getBytes("UTF-8"))
-      info(s"golden pinned: ${decoded.length} decodings")
-    } else {
-      val want = {
-        val s = scala.io.Source.fromFile(goldenPath.toString)("UTF-8")
-        try s.getLines().toVector finally s.close()
-      }
-      decoded.zip(want).zipWithIndex.foreach { case ((got, expect), i) =>
-        assert(got == expect, s"decoding drifted at sentence $i")
-      }
-      assert(decoded.length == want.length)
+    // a missing golden fails: output the test wrote itself would pass
+    // whatever the model decodes
+    if (!java.nio.file.Files.isRegularFile(goldenPath))
+      fail(s"golden $goldenPath is missing")
+    val want = {
+      val s = scala.io.Source.fromFile(goldenPath.toString)("UTF-8")
+      try s.getLines().toVector finally s.close()
     }
+    decoded.zip(want).zipWithIndex.foreach { case ((got, expect), i) =>
+      assert(got == expect, s"decoding drifted at sentence $i")
+    }
+    assert(decoded.length == want.length)
 
     // informative: training-set mention P/R of the model (not a gate —
     // 1,000 sentences is small for 22 nested types; determinism is)

@@ -6,9 +6,10 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Semantic gates for the graph-analytics operators ([[Graph]]):
   * closed-form fixtures for degrees/triangles/2-hop, a brute-force
-  * parity sweep on a seeded random graph, and PageRank pinned against
-  * a driver recompute (including dangling-node redistribution and the
-  * dyadic bit-exactness the q82 oracle relies on).
+  * parity sweep on a seeded random graph, and PageRank on both its
+  * execution paths pinned against a driver recompute and each other
+  * (including dangling-node redistribution and the dyadic bit-exactness
+  * the q82 oracle relies on).
   */
 class GraphSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -93,6 +94,23 @@ class GraphSpec extends AnyFunSuite {
     r
   }
 
+  /** Both execution paths of [[Graph.pageRank]]: the public entry picks
+    * the driver loop for every graph here (all far below
+    * [[Graph.prCollectThreshold]]); the distributed loop is forced by a
+    * threshold below any edge count.
+    */
+  private def distributedPageRank(e: DataFrame, iters: Int,
+                                  damping: Double = 0.85): DataFrame =
+    Graph.pageRankWith(e, iters, damping, "src", "dst", collectThreshold = -1)
+
+  private val pageRankPaths
+      : Seq[(String, (DataFrame, Int, Double) => DataFrame)] = Seq(
+    "driver" -> ((e, i, d) => Graph.pageRank(e, i, d)),
+    "distributed" -> ((e, i, d) => distributedPageRank(e, i, d)))
+
+  private def ranksOf(df: DataFrame): Map[Long, Double] =
+    df.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+
   test("pageRank: driver-recompute parity incl. dangling nodes, mass conserved") {
     val rnd = new scala.util.Random(11)
     // 40 nodes, ~3 out-edges each; nodes 35..39 dangling (no out-edges)
@@ -100,15 +118,19 @@ class GraphSpec extends AnyFunSuite {
       u <- 0L until 35L; _ <- 0 until 3
       v = rnd.nextInt(40).toLong if v != u
     } yield (u, v)
-    val got = Graph.pageRank(edgeDf(es), iters = 10, damping = 0.85)
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     val want = pageRankLocal(es, 10, 0.85)
-    assert(got.keySet == want.keySet)
-    got.foreach { case (nd, pr) =>
-      assert(math.abs(pr - want(nd)) < 1e-9, s"node $nd: $pr vs ${want(nd)}")
+    for ((path, pageRank) <- pageRankPaths) {
+      val ranks = pageRank(edgeDf(es), 10, 0.85)
+      val got = ranksOf(ranks)
+      Graph.releaseRanks(ranks)
+      assert(got.keySet == want.keySet, path)
+      got.foreach { case (nd, pr) =>
+        assert(math.abs(pr - want(nd)) < 1e-9,
+          s"$path: node $nd: $pr vs ${want(nd)}")
+      }
+      // unnormalized formulation with dangling redistribution: sum == |V|
+      assert(math.abs(got.values.sum - want.size) < 1e-6, path)
     }
-    // unnormalized formulation with dangling redistribution: sum == |V|
-    assert(math.abs(got.values.sum - want.size) < 1e-6)
   }
 
   test("pageRank: dyadic inputs (pow-2 out-degrees, damping 1/2) are bit-exact") {
@@ -118,11 +140,36 @@ class GraphSpec extends AnyFunSuite {
       (u, (u * 13 + 5) % n))).distinct
     assert(es.groupBy(_._1).values.forall(g =>
       g.size == 1 || g.size == 2)) // powers of two
-    val got = Graph.pageRank(edgeDf(es), iters = 4, damping = 0.5)
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     val want = pageRankLocal(es, 4, 0.5)
+    for ((path, pageRank) <- pageRankPaths) {
+      val ranks = pageRank(edgeDf(es), 4, 0.5)
+      val got = ranksOf(ranks)
+      Graph.releaseRanks(ranks)
+      assert(got.keySet == want.keySet, path)
+      got.foreach { case (nd, pr) =>
+        assert(pr == want(nd), s"$path: node $nd not bit-exact: $pr vs ${want(nd)}")
+      }
+    }
+  }
+
+  test("pageRank: driver and distributed paths agree on one multigraph") {
+    import spark.implicits._
+    // 300 nodes with parallel edges, self-loops, dangling nodes
+    // (250..299 have no out-edges) and null endpoints both paths drop
+    val rnd = new scala.util.Random(17)
+    val es = (for {
+      u <- 0L until 250L; _ <- 0 until 1 + rnd.nextInt(6)
+    } yield (Option(u), Option(rnd.nextInt(300).toLong))) ++
+      Seq((None, Some(1L)), (Some(2L), None), (None, None))
+    val df = es.toDF("src", "dst")
+    val driver = Graph.pageRank(df, iters = 12, damping = 0.85)
+    val dist = distributedPageRank(df, iters = 12, damping = 0.85)
+    val got = ranksOf(driver)
+    val want = ranksOf(dist)
+    Graph.releaseRanks(dist)
+    assert(got.keySet == want.keySet)
     got.foreach { case (nd, pr) =>
-      assert(pr == want(nd), s"node $nd not bit-exact: $pr vs ${want(nd)}")
+      assert(math.abs(pr - want(nd)) < 1e-9, s"node $nd: $pr vs ${want(nd)}")
     }
   }
 
@@ -195,35 +242,56 @@ class GraphSpec extends AnyFunSuite {
 
   test("releaseRanks/releaseAllRanks free the checkpoint pins behind pageRank results") {
     val sc = spark.sparkContext
-    val before = sc.getRDDStorageInfo.map(_.id).toSet
-    val r1 = Graph.pageRank(edgeDf(Seq((1L, 2L), (2L, 3L), (3L, 1L))),
+    def stored = sc.getRDDStorageInfo.map(_.id).toSet
+    // a driver-path result is a local frame: nothing pinned, nothing to free
+    val before0 = stored
+    val local = Graph.pageRank(edgeDf(Seq((1L, 2L), (2L, 3L), (3L, 1L))),
       iters = 3)
+    local.count()
+    assert(stored -- before0 == Set.empty,
+      "a driver-path pageRank result should hold no RDD storage")
+    Graph.releaseRanks(local, blocking = true)
+    assert(local.count() == 3, "releasing a local result must not break it")
+
+    val before = stored
+    val r1 = distributedPageRank(
+      edgeDf(Seq((1L, 2L), (2L, 3L), (3L, 1L))), iters = 3)
     r1.count()
-    val pinned = sc.getRDDStorageInfo.map(_.id).toSet -- before
+    val pinned = stored -- before
     assert(pinned.nonEmpty, "pageRank's result should be checkpoint-pinned")
     Graph.releaseRanks(r1, blocking = true)
-    assert((sc.getRDDStorageInfo.map(_.id).toSet & pinned).isEmpty,
+    assert((stored & pinned).isEmpty,
       "releaseRanks left the result's checkpoint blocks pinned")
     // the session sweep covers frames the caller lost track of (the
     // bench-teardown path); it must catch a frame never released 1-by-1
-    val r2 = Graph.pageRank(edgeDf(Seq((1L, 2L), (2L, 1L))), iters = 2)
+    val r2 = distributedPageRank(edgeDf(Seq((1L, 2L), (2L, 1L))),
+      iters = 2)
     r2.count()
-    val pinned2 = sc.getRDDStorageInfo.map(_.id).toSet -- before
+    val pinned2 = stored -- before
     assert(pinned2.nonEmpty)
     Graph.releaseAllRanks(spark, blocking = true)
-    assert((sc.getRDDStorageInfo.map(_.id).toSet & pinned2).isEmpty,
+    assert((stored & pinned2).isEmpty,
       "releaseAllRanks left checkpoint pins behind")
   }
 
   test("pageRank: guards reject empty graphs and bad parameters") {
-    intercept[IllegalArgumentException] {
-      Graph.pageRank(edgeDf(Seq((1L, 2L))), iters = 0)
-    }
-    intercept[IllegalArgumentException] {
-      Graph.pageRank(edgeDf(Seq((1L, 2L))), iters = 5, damping = 1.5)
-    }
-    intercept[IllegalArgumentException] {
-      Graph.pageRank(edgeDf(Seq.empty[(Long, Long)]), iters = 1)
+    val sc = spark.sparkContext
+    for ((path, pageRank) <- pageRankPaths) {
+      intercept[IllegalArgumentException] {
+        pageRank(edgeDf(Seq((1L, 2L))), 0, 0.85)
+      }
+      intercept[IllegalArgumentException] {
+        pageRank(edgeDf(Seq((1L, 2L))), 5, 1.5)
+      }
+      // the empty-graph guard fires after the edge frame is persisted:
+      // it must release what it pinned before failing
+      val before = sc.getPersistentRDDs.keySet
+      val err = intercept[IllegalArgumentException] {
+        pageRank(edgeDf(Seq.empty[(Long, Long)]), 1, 0.85)
+      }
+      assert(err.getMessage.contains("pageRank on an empty graph"), path)
+      assert(sc.getPersistentRDDs.keySet -- before == Set.empty,
+        s"$path: the empty-graph failure left persisted storage behind")
     }
   }
 }
